@@ -133,9 +133,9 @@ def _index(spark: SparkSession, sf_dir: str) -> InvertedIndex:
             prefix_fields=PREFIX_FIELDS,
         )
         persist_index(idx)
-        # blocked postings (honey-style wdf_max blocks) so weighted-OR
-        # serving — including batch_wand_serving — genuinely routes
-        # through block-max WAND instead of silently falling back
+        # blocked postings (honey-style wdf_max blocks) so
+        # batch_wand_serving genuinely routes through block-max WAND
+        # instead of silently falling back to row postings
         from xapian_spark.index.blocks import pack_blocks
 
         idx.blocked = pack_blocks(idx.postings).persist()

@@ -3,8 +3,10 @@
     spark-submit --py-files xapian_spark.zip scripts/query.py \
         --index /data/index --query "error AND handling" -k 10
 
---engine wand uses the blocked/block-max path (free-text OR only);
---engine planner evaluates the full boolean/positional AST.
+--engine planner evaluates each query's full boolean/positional AST;
+--engine wand serves all the --query strings as one free-text OR batch
+through block-max WAND (Planner.search_batch_or, use_wand=True), and
+each query's elapsed_sec is that whole batch's time.
 """
 
 from __future__ import annotations
@@ -17,7 +19,6 @@ import time
 sys.path.insert(0, __file__.rsplit("/", 2)[0])
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 
 def main() -> None:
@@ -35,33 +36,43 @@ def main() -> None:
     from xapian_spark.index import merge
     from xapian_spark.query.parser import QueryParser
     from xapian_spark.query.planner import Planner
-    from xapian_spark.query.wand import wand_topk
     from xapian_spark.ranking.weights import WEIGHT_SCHEMES
 
     idx = merge.read_warehouse(spark, args.index)
-    weight = WEIGHT_SCHEMES[args.weight]()
+    planner = Planner(idx, WEIGHT_SCHEMES[args.weight]())
     parser = QueryParser()
-    out = []
-    for qstr in args.query:
+    results = []  # (query, elapsed_sec, rows)
+    if args.engine == "wand":
+        batch = {
+            str(i): [t.term for t in parser.parse_free_text(qstr)]
+            for i, qstr in enumerate(args.query)
+        }
         t0 = time.perf_counter()
-        if args.engine == "wand":
-            terms = [t.term for t in parser.parse_free_text(qstr)]
-            tstats = idx.collect_term_stats(sorted(set(terms)))
-            res = (
-                wand_topk(idx.blocked, idx.stats, tstats, terms, args.k, weight)
-                .orderBy(F.desc("score"), "docid").limit(args.k).collect()
+        rows = (
+            planner.search_batch_or(batch, k=args.k, use_wand=True)
+            .orderBy("query", "rank").collect()
+        )
+        elapsed = time.perf_counter() - t0
+        for i, qstr in enumerate(args.query):
+            results.append(
+                (qstr, elapsed, [r for r in rows if r["query"] == str(i)])
             )
-        else:
-            node = parser.parse_query(qstr)
-            res = Planner(idx, weight).search(node, k=args.k).collect()
-        out.append({
+    else:
+        for qstr in args.query:
+            t0 = time.perf_counter()
+            res = planner.search(parser.parse_query(qstr), k=args.k).collect()
+            results.append((qstr, time.perf_counter() - t0, res))
+    out = [
+        {
             "query": qstr,
-            "elapsed_sec": round(time.perf_counter() - t0, 4),
+            "elapsed_sec": round(elapsed, 4),
             "hits": [
                 {"docid": r["docid"], "score": round(r["score"], 6)}
                 for r in res
             ],
-        })
+        }
+        for qstr, elapsed, res in results
+    ]
     print(json.dumps(out, indent=1))
     spark.stop()
 

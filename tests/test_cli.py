@@ -79,15 +79,20 @@ def test_cli_build_and_query(spark, cli_warehouse):
 
 
 def test_cli_query_wand_engine_agrees(cli_warehouse):
+    """--engine wand serves the --query strings as one batched block-max
+    WAND call; each query's hits equal the planner's."""
+    queries = ["--query", "dup vector", "--query", "scan key line"]
     res = _run([
-        "scripts/query.py", "--index", cli_warehouse,
-        "--query", "dup vector", "-k", "5", "--engine", "wand",
+        "scripts/query.py", "--index", cli_warehouse, *queries,
+        "-k", "5", "--engine", "wand",
     ])
     res2 = _run([
-        "scripts/query.py", "--index", cli_warehouse,
-        "--query", "dup vector", "-k", "5", "--engine", "planner",
+        "scripts/query.py", "--index", cli_warehouse, *queries,
+        "-k", "5", "--engine", "planner",
     ])
-    assert res[0]["hits"] == res2[0]["hits"]
+    assert [q["query"] for q in res] == ["dup vector", "scan key line"]
+    assert res[0]["hits"] and res[1]["hits"]
+    assert [q["hits"] for q in res] == [q["hits"] for q in res2]
 
 
 def test_cli_delve(cli_warehouse):

@@ -277,18 +277,24 @@ def test_pl2_maxpart_safe_for_high_frequency_terms():
 
 def test_wand_rejects_uniqterms_weights(simple_index):
     """DiceCoeffWeight needs uniqterms, which blocked postings lack —
-    wand must fail loudly, not with an unresolved-column error."""
+    batched WAND must fail loudly, naming the weight, not with an
+    unresolved-column error."""
     import pytest as _pytest
 
     from xapian_spark.index.blocks import pack_blocks
-    from xapian_spark.query.wand import wand_topk
+    from xapian_spark.query.planner import Planner
+    from xapian_spark.query.wand import batch_wand_topk
 
     blocked = pack_blocks(simple_index.postings)
     tstats = simple_index.collect_term_stats(["paragraph"])
-    with _pytest.raises(ValueError, match="uniqterms"):
-        wand_topk(
-            blocked, simple_index.stats, tstats, ["paragraph"], 5,
+    with _pytest.raises(ValueError, match="DiceCoeffWeight"):
+        batch_wand_topk(
+            blocked, simple_index.stats, tstats, {"q": ["paragraph"]}, 5,
             DiceCoeffWeight(),
+        )
+    with _pytest.raises(ValueError, match="DiceCoeffWeight"):
+        Planner(simple_index, weight=DiceCoeffWeight()).search_batch_or(
+            {"q": ["paragraph"]}, k=5, use_wand=True
         )
 
 

@@ -1,7 +1,7 @@
 """Warehouse build: checkpointed stages, resumability, invariants
-(xapian-check style, bin/xapian-check.cc), blocked-layout roundtrip, and
-block-max WAND safety (exact top-k equivalence, the matcherdesign.rst
-pruning contract)."""
+(xapian-check style, bin/xapian-check.cc), blocked-layout roundtrip,
+block-max WAND batch safety (exact top-k equivalence, the matcherdesign.rst
+pruning contract) and the single-query serving path."""
 
 from __future__ import annotations
 
@@ -13,7 +13,9 @@ from pyspark.sql import functions as F
 
 from xapian_spark.index import merge
 from xapian_spark.index.blocks import pack_blocks, unpack_blocks, vbyte_decode, vbyte_encode
-from xapian_spark.query.wand import brute_topk, wand_topk
+from xapian_spark.query import ast
+from xapian_spark.query.planner import Planner
+from xapian_spark.query.wand import batch_wand_topk
 from xapian_spark.ranking.weights import BM25Weight
 
 
@@ -129,128 +131,155 @@ def test_resumable_build(spark, corpus, tmp_path):
     shutil.rmtree(path)
 
 
+def _or(terms):
+    return ast.Or(tuple(ast.Term(t) for t in terms))
+
+
+def _single(pl, terms, k=10):
+    return [(r["docid"], r["score"])
+            for r in pl.search(_or(terms), k=k).collect()]
+
+
+def _batch(pl, terms, use_wand, k=10):
+    return [
+        (r["docid"], r["score"])
+        for r in pl.search_batch_or({"q": terms}, k=k, use_wand=use_wand)
+        .orderBy("rank").collect()
+    ]
+
+
+def _assert_same_topk(got, want, rel=1e-9):
+    assert [d for d, _ in got] == [d for d, _ in want]
+    for (_, a), (_, b) in zip(got, want):
+        assert a == pytest.approx(b, rel=rel)
+
+
 @pytest.mark.parametrize(
     "terms",
     [["dup"], ["dup", "vector"], ["scan", "key", "line"],
      ["batch", "small", "scan", "agg", "the"]],
 )
 def test_wand_exact_topk(spark, wh, terms):
-    idx = merge.read_warehouse(spark, wh)
-    tstats = idx.collect_term_stats(terms)
-    w = BM25Weight()
-    wt = (
-        wand_topk(idx.blocked, idx.stats, tstats, terms, 10, w)
-        .orderBy(F.desc("score"), "docid").limit(10).collect()
-    )
-    bt = (
-        brute_topk(idx.blocked, idx.stats, tstats, terms, 10, w)
-        .orderBy(F.desc("score"), "docid").limit(10).collect()
-    )
-    assert [(r["docid"], round(r["score"], 9)) for r in wt] == [
-        (r["docid"], round(r["score"], 9)) for r in bt
-    ]
+    """Single-query search, batched block-max WAND and the unpruned
+    row-postings batch agree on the exact top-k: batch WAND pruning is
+    safe, and the single-query planner ranks as both batch paths do."""
+    pl = Planner(merge.read_warehouse(spark, wh))
+    single = _single(pl, terms)
+    assert single
+    _assert_same_topk(_batch(pl, terms, use_wand=True), single)
+    _assert_same_topk(_batch(pl, terms, use_wand=False), single)
 
 
 def test_wand_matches_planner(spark, wh):
-    """Rank identity between the blocked/WAND path and the row-postings
-    Planner path for a weighted-OR query."""
-    from xapian_spark.query import ast
-    from xapian_spark.query.planner import Planner
-
+    """Rank identity between the batched blocked/WAND path and the
+    single-query Planner path for a weighted-OR query."""
     idx = merge.read_warehouse(spark, wh)
     terms = ["dup", "vector", "fast"]
-    tstats = idx.collect_term_stats(terms)
-    wt = (
-        wand_topk(idx.blocked, idx.stats, tstats, terms, 10, BM25Weight())
-        .orderBy(F.desc("score"), "docid").limit(10).collect()
-    )
     pl = Planner(idx)
-    node = ast.Or(tuple(ast.Term(t) for t in terms))
-    single = pl.search(node, k=10).collect()
-    assert [r["docid"] for r in wt] == [r["docid"] for r in single]
-    for a, b in zip(wt, single):
-        assert a["score"] == pytest.approx(b["score"], rel=1e-12)
+    single = _single(pl, terms)
+    _assert_same_topk(_batch(pl, terms, use_wand=True), single, rel=1e-12)
+    _assert_same_topk(_batch(pl, terms, use_wand=False), single, rel=1e-12)
 
 
 @pytest.mark.parametrize("terms", [["dup"], ["scan", "key", "line"]])
 def test_wand_sumextra_exact(spark, wh, terms):
-    """BM25 k2 > 0 has a doc-dependent sumextra.  VERDICT r1 #4: the old
-    code bailed out to threshold=0; the new threshold includes each
-    candidate's own sumextra and the bound adds maxextra — pruning must
-    remain EXACT."""
+    """BM25 k2 > 0 has a doc-dependent sumextra (bm25weight.cc), added once
+    per matching doc: single-query search must score it exactly as the
+    batched planner (search_batch) does, and it must move the scores."""
     idx = merge.read_warehouse(spark, wh)
-    tstats = idx.collect_term_stats(terms)
-    w = BM25Weight(k2=1.0)
-    wt = (
-        wand_topk(idx.blocked, idx.stats, tstats, terms, 10, w)
-        .orderBy(F.desc("score"), "docid").limit(10).collect()
-    )
-    bt = (
-        brute_topk(idx.blocked, idx.stats, tstats, terms, 10, w)
-        .orderBy(F.desc("score"), "docid").limit(10).collect()
-    )
-    assert [(r["docid"], round(r["score"], 9)) for r in wt] == [
-        (r["docid"], round(r["score"], 9)) for r in bt
+    pl = Planner(idx, weight=BM25Weight(k2=1.0))
+    got = [(r["docid"], round(r["score"], 9))
+           for r in pl.search(_or(terms), k=10).collect()]
+    want = [
+        (r["docid"], round(r["score"], 9))
+        for r in pl.search_batch({"q": _or(terms)}, k=10)
+        .orderBy("rank").collect()
     ]
+    assert got == want
+    plain = _single(Planner(idx), terms)
+    assert [round(s, 9) for _, s in plain] != [s for _, s in got]
 
 
 def test_wand_large_candidate_fallback(spark, wh):
-    """max_broadcast_candidates=0 forces the shuffled equality semi-join
-    (the path taken when the surviving-candidate set is too big to
-    broadcast); results must be identical to the broadcast path."""
+    """max_broadcast_candidates=0 forces the shuffled equality semi-joins
+    (the path taken when the candidate estimate is too big to broadcast);
+    results must be identical to the broadcast path."""
     idx = merge.read_warehouse(spark, wh)
-    terms = ["dup", "vector"]
-    tstats = idx.collect_term_stats(terms)
+    queries = {"q1": ["dup", "vector"], "q2": ["scan", "key", "line"],
+               "q3": ["batch", "small", "scan", "agg", "the"]}
+    tstats = idx.collect_term_stats(
+        sorted({t for ts in queries.values() for t in ts})
+    )
     w = BM25Weight()
-    a = (
-        wand_topk(idx.blocked, idx.stats, tstats, terms, 10, w,
-                  max_broadcast_candidates=0)
-        .orderBy(F.desc("score"), "docid").limit(10).collect()
-    )
-    b = (
-        wand_topk(idx.blocked, idx.stats, tstats, terms, 10, w)
-        .orderBy(F.desc("score"), "docid").limit(10).collect()
-    )
-    assert [(r["docid"], round(r["score"], 9)) for r in a] == [
-        (r["docid"], round(r["score"], 9)) for r in b
-    ]
+
+    def run(**kw):
+        return [
+            (r["query"], r["rank"], r["docid"], round(r["score"], 9))
+            for r in batch_wand_topk(idx.blocked, idx.stats, tstats, queries,
+                                     10, w, **kw)
+            .orderBy("query", "rank").collect()
+        ]
+
+    a = run(max_broadcast_candidates=0)
+    assert a and a == run()
 
 
-def test_search_default_routes_through_wand(spark, wh, monkeypatch):
-    """Weighted-OR search over a warehouse index must take the block-max
-    WAND path by default (VERDICT r1 #3), and still rank-match plan()."""
-    from xapian_spark.query import ast, wand
-    from xapian_spark.query.planner import Planner
+def test_search_weighted_or_takes_row_plan(spark, wh, monkeypatch):
+    """Weighted-OR search over a warehouse index is served by the
+    row-postings plan, never by wand.py, and still rank-matches plan()."""
+    from xapian_spark.query import wand
 
     idx = merge.read_warehouse(spark, wh)
     pl = Planner(idx)
-    called = {}
-    orig = wand.wand_topk
-
-    def spy(*a, **kw):
-        called["yes"] = True
-        return orig(*a, **kw)
-
-    monkeypatch.setattr(wand, "wand_topk", spy)
-    node = ast.Or((ast.Term("dup"), ast.Term("vector")))
+    called = []
+    for name, fn in list(vars(wand).items()):
+        if callable(fn) and getattr(fn, "__module__", None) == wand.__name__:
+            monkeypatch.setattr(
+                wand, name,
+                lambda *a, _n=name, **kw: called.append(_n),
+            )
+    node = _or(["dup", "vector"])
     got = pl.search(node, k=10).collect()
-    assert called.get("yes"), "search() did not route through wand_topk"
+    assert not called, f"search() called into wand.py: {called}"
     brute = (
         pl.plan(node).orderBy(F.desc("score"), "docid").limit(10).collect()
     )
-    assert [r["docid"] for r in got] == [r["docid"] for r in brute]
-    # non-OR shapes still take the planner (AND must not be wand-routed)
-    called.clear()
+    assert got and [r["docid"] for r in got] == [r["docid"] for r in brute]
     pl.search(ast.And((ast.Term("dup"), ast.Term("vector"))), k=10).collect()
-    assert "yes" not in called
+    assert not called
+
+
+def _jobs_of(spark, fn):
+    """Spark job ids run by fn(), read from its own job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    gid = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, "job-count probe")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return sc.statusTracker().getJobIdsForGroup(gid)
+
+
+def test_search_weighted_or_job_count(spark, wh):
+    """A single weighted-OR query runs at most 3 Spark jobs (term-stats
+    collect, the groupBy(docid) stage, the final collect), and at most 2
+    once its terms' stats are cached: a per-query pruning pass with its
+    own threshold, gate and checkpoint jobs would fail this."""
+    pl = Planner(merge.read_warehouse(spark, wh))
+    node = _or(["scan", "key", "line"])
+    cold = _jobs_of(spark, lambda: pl.search(node, k=10).collect())
+    warm = _jobs_of(spark, lambda: pl.search(node, k=10).collect())
+    assert 0 < len(cold) <= 3, cold
+    assert 0 < len(warm) <= 2, warm
 
 
 def test_batch_wand_matches_row_path(spark, wh):
     """Batched block-max serving (batch_wand_topk) must be rank- and
     score-identical to the row-postings batch path for every query."""
-    from xapian_spark.query.planner import Planner
-    from xapian_spark.query.wand import batch_wand_topk
-
     idx = merge.read_warehouse(spark, wh)
     queries = {
         "q1": ["dup"],
@@ -279,8 +308,6 @@ def test_batch_wand_matches_row_path(spark, wh):
         assert a["score"] == pytest.approx(b["score"], rel=1e-9)
     # and the WAND path was actually taken (sanity: direct call agrees)
     tstats = idx.collect_term_stats(sorted({t for ts in queries.values() for t in ts}))
-    from xapian_spark.ranking.weights import BM25Weight
-
     direct = (
         batch_wand_topk(idx.blocked, idx.stats, tstats, queries, 10,
                         BM25Weight())
@@ -369,8 +396,6 @@ def test_reference_docdata(spark, tmp_path):
     assert all(v == 0 for v in inv.values()), inv
 
     # and the index serves normally
-    from xapian_spark.query.planner import Planner
-    from xapian_spark.query import ast
 
     hits = Planner(idx).search(ast.Term("dup"), k=5).collect()
     assert len(hits) == 5
@@ -378,10 +403,9 @@ def test_reference_docdata(spark, tmp_path):
 
 def test_batch_auto_path_selection_matches_row_path(spark, wh):
     """use_wand="auto" (measured WAND/row routing) must be rank- and
-    score-identical to the row-postings path on BOTH the cold call (probe
-    slices run through different paths) and the warm call (cached
+    score-identical to the row-postings path on BOTH exploration batches
+    (each served whole by one path) and on the committed calls (cached
     decision routes the whole batch), and must cache a decision."""
-    from xapian_spark.query.planner import Planner
 
     idx = merge.read_warehouse(spark, wh)
     queries = {
@@ -468,37 +492,21 @@ def test_v2_blocked_smaller_and_selfdescribing(spark, wh, wh2):
 
 
 def test_v2_wand_matches_v1_and_brute(spark, wh, wh2):
-    """WAND over v2 blocks (candidate-scoped doclen join) must equal both
-    brute force over v2 and the v1 results, single-query and batched."""
-    from xapian_spark.query.planner import Planner
-
+    """Serving over a v2 warehouse must equal serving over v1: the
+    single-query planner, and batched WAND (candidate-scoped doclen join)
+    against the unpruned row path."""
     idx1 = merge.read_warehouse(spark, wh)
     idx2 = merge.read_warehouse(spark, wh2)
     w = BM25Weight()
     for terms in (["dup"], ["dup", "vector"], ["scan", "key", "line"]):
-        tstats = idx2.collect_term_stats(terms)
-        got = sorted(
-            (r["docid"], round(r["score"], 9))
-            for r in wand_topk(idx2.blocked, idx2.stats, tstats, terms,
-                               10, w, doclens=idx2.doclens).collect()
-        )
-        brute = sorted(
-            (r["docid"], round(r["score"], 9))
-            for r in brute_topk(
-                idx2.blocked, idx2.stats, tstats, terms, 10, w,
-                doclens=idx2.doclens,
-            ).orderBy(F.desc("score"), F.asc("docid")).limit(10).collect()
-        )
-        v1 = sorted(
-            (r["docid"], round(r["score"], 9))
-            for r in wand_topk(idx1.blocked, idx1.stats, tstats, terms,
-                               10, w).collect()
-        )
-        assert got == brute == v1
+        got = [(d, round(sc, 9)) for d, sc in _single(Planner(idx2), terms)]
+        v1 = [(d, round(sc, 9)) for d, sc in _single(Planner(idx1), terms)]
+        assert got and got == v1
     # missing doclens raises loudly instead of silently misdecoding
     with pytest.raises(ValueError, match="doclens"):
-        wand_topk(idx2.blocked, idx2.stats,
-                  idx2.collect_term_stats(["dup"]), ["dup"], 10, w)
+        batch_wand_topk(idx2.blocked, idx2.stats,
+                        idx2.collect_term_stats(["dup"]), {"q": ["dup"]},
+                        10, w)
     # batch path (MaxScore + block-max) through the planner, which wires
     # doclens automatically
     queries = {
@@ -553,3 +561,25 @@ def test_resume_payload_v_mismatch_raises(spark, corpus, tmp_path):
     blocked = spark.read.parquet(os.path.join(path, "blocked"))
     assert "payload_v" in blocked.columns
     shutil.rmtree(path)
+
+
+def test_mixed_payload_versions_fail_loudly(spark, wh, wh2):
+    """A v1 blocked table unioned by name into a v2 one has null payload_v
+    rows; decoding them with the v2 stride would yield wrong postings, so
+    the decode raises instead."""
+    import pandas as pd
+
+    from xapian_spark.index.blocks import _decode_block_batch
+
+    b1 = spark.read.parquet(os.path.join(wh, "blocked"))
+    b2 = spark.read.parquet(os.path.join(wh2, "blocked"))
+    mixed = b2.unionByName(b1, allowMissingColumns=True)
+    with pytest.raises(Exception, match="mixed payload versions"):
+        unpack_blocks(mixed).collect()
+    rows = b2.limit(2).toPandas()
+    rows["payload_v"] = pd.array([2, None], dtype="Int32")
+    with pytest.raises(ValueError, match="mixed payload versions"):
+        _decode_block_batch(rows)
+    rows["payload_v"] = pd.array([2, 1], dtype="Int32")
+    with pytest.raises(ValueError, match="mixed payload versions"):
+        _decode_block_batch(rows)

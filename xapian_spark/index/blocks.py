@@ -469,40 +469,6 @@ def pack_blocks_arrow(block_size: int = DEFAULT_BLOCK, payload_v: int = 1):
     return pack
 
 
-def pack_blocks_udf(block_size: int = DEFAULT_BLOCK):
-    """mapInPandas twin of pack_blocks_arrow (same vectorized core); kept
-    for callers that feed pandas batches directly."""
-
-    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def np_batches():
-            for batch in batches:
-                yield (
-                    pa.array(batch["term"], type=pa.string()),
-                    _np_int(batch["docid"]),
-                    _np_int(batch["wdf"]),
-                    _np_int(batch["doclen"]),
-                )
-
-        for tpb, first, last, nb, wmax, stream, offs in _pack_stream(
-            np_batches(), block_size
-        ):
-            payload = pa.Array.from_buffers(
-                pa.binary(), len(tpb),
-                [None, pa.py_buffer(offs.astype(np.int32).tobytes()),
-                 pa.py_buffer(stream.tobytes())],
-            )
-            yield pd.DataFrame({
-                "term": tpb,
-                "first_docid": first,
-                "last_docid": last,
-                "n": nb.astype(np.int32),
-                "wdf_max": wmax.astype(np.int32),
-                "payload": payload.to_pandas(),
-            })
-
-    return pack
-
-
 def pack_blocks(
     postings: DataFrame,
     block_size: int = DEFAULT_BLOCK,
@@ -539,11 +505,19 @@ def _decode_block_batch(batch: pd.DataFrame) -> dict[str, np.ndarray]:
     219-329; we decode batch-at-a-time).
 
     Payload-version aware: v2 batches (payload_v column present) carry no
-    doclen stream, and the returned dict has no "doclen" key.  A batch is
-    all-v1 or all-v2 (the column is table-constant; mixed tables are not
-    constructed anywhere).
+    doclen stream, and the returned dict has no "doclen" key.  A batch
+    with the column must be all-v2: a null or other version (e.g. a v1
+    table unioned in by name) raises instead of decoding v1 payloads
+    with the v2 stride.
     """
     v2 = "payload_v" in batch.columns
+    if v2:
+        pv = batch["payload_v"]
+        if pv.isna().any() or (pv != 2).any():
+            raise ValueError(
+                "mixed payload versions in one blocked table: every row's "
+                "payload_v must be 2"
+            )
     s = 2 if v2 else 3
     ns = batch["n"].to_numpy(np.int64)
     ints = vbyte_decode(b"".join(batch["payload"]))

@@ -776,25 +776,21 @@ class Planner:
         thresholds split terms into essential (candidate-generating) and
         non-essential (looked up for candidate docs only), so aggregate
         input is proportional to candidates x query terms instead of
-        postings x queries.  On a 500-query selective batch over a
-        100k-doc index (32 cores) WAND wins 5.1 s vs 9.9 s, but when every
-        query hits only common terms (nothing is non-essential and
-        candidates are most of the corpus) the simpler row-postings plan
-        wins — measured 13 s vs 37 s on a hot-term batch.
+        postings x queries.  Measured on a 20,000-doc warehouse on 4 cores
+        (warehouse_bench), it is the slower path on both batch classes:
+        selective 250-query batches run at about 113 QPS via WAND against
+        about 234 via rows, hot 100-query batches at about 42 against 81.
 
-        use_wand="auto" picks the path by MEASUREMENT: a probe slice of
-        the batch runs through both paths (interleaved queries, so a
-        systematically ordered batch cannot bias one slice), the faster
-        marginal rate wins the remainder, and the decision is cached on
-        this Planner so subsequent batches route straight to the winner —
-        steady-state serving runs at max(wand, row) throughput with the
-        probe amortized across the serving lifetime.  Measured, not
-        modeled, because which path wins depends on the workload shape
-        (selectivity) AND on the host window (Python block decode vs JVM
-        join throughput shift differently under memory-bandwidth
-        contention; observed 0.76x-4.4x swings on one workload) — a
-        driver-side cost model sees only the first effect.  The serving
-        analogue of AQE: re-plan from observed execution, not estimates.
+        use_wand="auto" picks the path by MEASUREMENT, whole batches at a
+        time (explore-then-commit, _batch_or_auto): the first batch after
+        (re)start is served entirely by one path, the next entirely by the
+        other, both timed at full size and both returning real results;
+        later batches ride the path with the lower per-query time until
+        AUTO_REPROBE_EVERY batches pass, when the two-batch exploration
+        repeats with the order flipped.  Measured, not modeled, because
+        which path wins depends on the workload shape (selectivity) AND on
+        the host (Python block decode vs JVM join throughput) — a
+        driver-side cost model sees only the first effect.
         """
         from xapian_spark.ranking.weights import BM25Weight, TradWeight
 
@@ -982,51 +978,19 @@ class Planner:
         }
         return out
 
-    @staticmethod
-    def _as_weighted_or(query: ast.Node) -> dict[str, int] | None:
-        """If `query` is a plain weighted-OR of terms (a single Term or an
-        OR whose children are all Terms), return its wqf map; else None.
-        These are the shapes block-max WAND serves (orpostlist.cc:106-140
-        decaying OR — the reference's dynamic-pruning sweet spot)."""
-        if isinstance(query, ast.Term):
-            return {query.term: query.wqf}
-        if isinstance(query, ast.Or) and all(
-            isinstance(s, ast.Term) for s in query.subs
-        ):
-            wqf: dict[str, int] = {}
-            for s in query.subs:
-                wqf[s.term] = wqf.get(s.term, 0) + s.wqf
-            return wqf
-        return None
-
     def search(self, query: ast.Node, k: int = 10, offset: int = 0) -> DataFrame:
         """Top-k MSet: (rank, docid, score); rank 1-based after offset.
 
-        Weighted-OR queries over a warehouse-backed index (blocked postings
-        present) are served by block-max WAND (wand.py) — the default
-        serving path does early termination, matching the reference's
-        decaying-OR matcher design (docs/matcherdesign.rst:51-100).  Other
-        shapes (boolean combiners, positional, values) take the full
-        planner."""
-        wqf_or = self._as_weighted_or(query)
-        if (
-            wqf_or is not None
-            and self.index.blocked is not None
-            and not getattr(self.weight, "needs_uniqterms", False)
-        ):
-            from xapian_spark.query.wand import wand_topk
-
-            terms = sorted(wqf_or)
-            tstats = self.index.collect_term_stats(terms)
-            if hasattr(self.weight, "set_query_length"):
-                self.weight.set_query_length(sum(wqf_or.values()))
-            matches = wand_topk(
-                self.index.blocked, self.index.stats, tstats, terms,
-                offset + k, self.weight, wqf=wqf_or,
-                doclens=self.index.doclens,
-            )
-        else:
-            matches = self.plan(query)
+        Every shape, weighted-OR included, is served by the row-postings
+        plan (plan()): the term-stats collect, one groupBy(docid) stage and
+        the caller's collect — 3 Spark jobs, 2 once the terms' stats are
+        cached.  Block-max pruning serves batches only (search_batch_or,
+        use_wand=True): for one query it cannot cut the parquet scan,
+        since a term's postings sit in one row group, and its extra
+        threshold, gate and checkpoint jobs cost more than the aggregate
+        rows it drops (3-term OR at 20,000 docs, local[4]: 11 jobs and a
+        0.81 s median vs 3 jobs and 0.21 s)."""
+        matches = self.plan(query)
         if (
             isinstance(query, ast.DecreasingValueWeightSource)
             and (query.range_start or query.range_end)

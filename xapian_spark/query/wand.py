@@ -1,261 +1,32 @@
-"""Block-max WAND top-k over the blocked postings table.
+"""Block-max WAND + MaxScore top-k for BATCHES of weighted-OR queries over
+the blocked postings table (Planner.search_batch_or, use_wand=True).
 
 The reference's dynamic pruning is iterator-state-driven: operators
 propagate w_min and OR decays to AND_MAYBE/AND when the heap threshold
 exceeds child maxweights (orpostlist.cc:106-140, postlisttree.h:111-123,
 docs/matcherdesign.rst:51-100).  That design is doc-at-a-time; a Spark
-re-expression must prune SET-at-a-time.  We use a safe two-pass block-max
-scheme built on the per-block exact wdf_max (honey-style,
+re-expression must prune SET-at-a-time, over a whole batch per plan.
+batch_wand_topk builds on the per-block exact wdf_max (honey-style,
 honey_postlist_encodings.h:26-111) and the BM25 maxpart bound formula
-(bm25weight.cc:183-208):
+(bm25weight.cc:183-208), with MaxScore essential / non-essential term
+splitting (Turtle & Flood, "Query evaluation: strategies and
+optimizations", 1995 — the public algorithm Lucene ships as its default
+dynamic-pruning strategy), so candidate generation touches only the
+selective terms and aggregate input stays proportional to candidates x
+query terms rather than postings x queries.
 
-  pass 0 (driver): per-term maxpart from term-level wdf_max; threshold T =
-      k-th best single-term score of the highest-impact term (a valid
-      lower bound of the true k-th best total score; computed from that
-      term's blocks only).
-  pass 1 (block prune): keep block B of term t iff
-      maxpart_block(t, B) + sum_{t' != t} maxpart(t') >= T.
-      For any doc d and any t in d's terms:
-         score(d) <= maxpart_block(t, B_t(d)) + sum_{t' != t} maxpart(t')
-      so a doc in the true top-k (score >= T) survives in at least one —
-      in fact every — of its blocks.  Pruning is SAFE for exact top-k.
-  pass 2 (rescore): decode surviving blocks -> candidate docids; fetch all
-      query-term postings for candidates via a block range join (docid
-      BETWEEN first_docid AND last_docid — the skip_to analogue,
-      glass_postlist.cc seek-by-key); score fully; orderBy.limit(k).
-
-At cluster scale pass 1 is a metadata-only parquet scan (term + wdf_max +
-docid range columns; predicate pushdown, no payload decode), and pass 2
-decodes only the handful of blocks that can contain competitive docs.
-
-The BATCH path (batch_wand_topk) additionally layers MaxScore essential /
-non-essential term splitting (Turtle & Flood, "Query evaluation:
-strategies and optimizations", 1995 — the public algorithm Lucene ships
-as its default dynamic-pruning strategy) so that candidate generation
-touches only the selective terms and aggregate input stays proportional
-to candidates x query terms rather than postings x queries.
+Single queries do not come here: Planner.search serves every shape from
+the row-postings plan, which runs fewer Spark jobs than any per-query
+pruning pass can save (see Planner.search).
 """
 
 from __future__ import annotations
 
-import os
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from xapian_spark.index.blocks import unpack_blocks
+from xapian_spark.index.blocks import unpack_blocks, unpack_blocks_keyed
 from xapian_spark.ranking.weights import GlobalStats, TermStats, Weight
-
-
-def wand_topk(
-    blocked: DataFrame,
-    stats: GlobalStats,
-    tstats: dict[str, TermStats],
-    terms: list[str],
-    k: int,
-    weight: Weight,
-    wqf: dict[str, int] | None = None,
-    max_broadcast_candidates: int = 200_000,
-    doclens: DataFrame | None = None,
-) -> DataFrame:
-    """Exact BM25 top-k for a weighted-OR query over blocked postings.
-
-    Returns the top-k (docid, score) rows, unordered (the checkpoint loses
-    ordering); callers re-sort with orderBy(score desc, docid) for ranks.
-    The top-k cut happens HERE, before the checkpoint, so only k rows are
-    ever materialized — not the full candidate score set.
-
-    Doc-dependent sumextra (e.g. BM25 k2) is handled SAFELY without
-    disabling pruning: the pass-0 threshold includes each candidate's own
-    sumextra (a valid lower bound on the true k-th best total), and the
-    pass-1 block bound adds maxextra (a valid upper bound on any doc's
-    extra part) — both sides stay conservative, pruning stays exact.
-
-    max_broadcast_candidates gates the pass-2 join strategy: a small
-    surviving-candidate set is broadcast into a block range join (the
-    skip_to analogue); a large one (weak threshold, hot terms) falls back
-    to decoding the query's blocks and a shuffled equality semi-join —
-    never an unbounded broadcast.
-    """
-    wqf = wqf or {}
-    if getattr(weight, "needs_uniqterms", False):
-        raise ValueError(
-            f"{type(weight).__name__} needs the per-doc uniqterms stat, "
-            "which blocked postings do not carry; use Planner.search"
-        )
-    # payload v2: blocks carry no doclen stream — scoring joins the
-    # warehouse doclens table back in, candidate-scoped (blocks.py module
-    # docstring; the glass separate-doclen-postlist layout)
-    v2 = "payload_v" in blocked.columns
-    if v2 and doclens is None:
-        raise ValueError("payload v2 blocked table requires doclens")
-    dl = doclens.select("docid", "doclen") if v2 else None
-    tws = {}
-    for t in terms:
-        ts = tstats.get(t)
-        if ts is None or ts.tf == 0:
-            continue
-        tws[t] = weight.init_term(stats, ts, wqf=wqf.get(t, 1))
-    if not tws:
-        return blocked.sparkSession.createDataFrame([], "docid long, score double")
-
-    live = sorted(tws)
-    dl_lb = stats.doclen_lower_bound
-    maxparts = {t: tws[t].maxpart(tstats[t].wdf_max, dl_lb) for t in live}
-    total_max = sum(maxparts.values())
-
-    qblocks = blocked.where(F.col("term").isin(live))
-
-    # -- pass 0: threshold from the highest-impact term ---------------------
-    # Each candidate's (sumpart + its OWN sumextra) is a lower bound on its
-    # true total score, so the k-th best of these is a valid threshold even
-    # for weights with a doc-dependent extra part (bm25weight.cc k2).
-    qlen = sum(wqf.get(t, 1) for t in terms)
-    t_star = max(live, key=lambda t: maxparts[t])
-    star = unpack_blocks(qblocks.where(F.col("term") == t_star))
-    if v2:
-        # candidate-scope the doclen attach like pass 2: the star term's
-        # posting count is known driver-side, so a selective star
-        # broadcasts its docids into a semi-join on the corpus-sized
-        # doclens table instead of shuffling all of it
-        if tstats[t_star].tf <= max_broadcast_candidates:
-            star_ids = star.select("docid")
-            star_dl = dl.join(F.broadcast(star_ids), "docid", "left_semi")
-            star = star.join(F.broadcast(star_dl), "docid")
-        else:
-            star = star.join(dl, "docid")
-    star_lb = (
-        tws[t_star].sumpart_expr(F.col("wdf"), F.col("doclen"))
-        + weight.sumextra_expr(F.col("doclen"), qlen, stats)
-    )
-    star_scores = (
-        star.select(star_lb.alias("s")).orderBy(F.desc("s")).limit(k).collect()
-    )
-    threshold = star_scores[-1]["s"] if len(star_scores) >= k else 0.0
-
-    # -- pass 1: block-max pruning (metadata only, no payload decode) -------
-    # Block upper bound adds maxextra so the comparison stays conservative
-    # against the sumextra-inclusive threshold.
-    mx_extra = weight.maxextra(stats, qlen)
-    bound = None
-    for t in live:
-        rest = total_max - maxparts[t] + mx_extra
-        b = tws[t].maxpart_expr(F.col("wdf_max"), dl_lb) + F.lit(rest)
-        cond = (F.col("term") == t) & (b >= F.lit(threshold))
-        bound = cond if bound is None else (bound | cond)
-    surviving = qblocks.where(bound)
-
-    # -- pass 2: candidates + exact rescore ---------------------------------
-    # persist: the candidate set feeds both the size gate and the final
-    # join; Spark's ContextCleaner drops the cached partitions once the
-    # returned plan's references are garbage collected
-    cands = unpack_blocks(surviving).select("docid").distinct().persist()
-    n_cands = cands.count()
-    if n_cands <= max_broadcast_candidates:
-        # fetch every query-term block that can contain a candidate
-        # (skip_to): tiny candidate set broadcast into a range join.
-        fetch = (
-            qblocks.alias("b")
-            .join(
-                F.broadcast(cands.alias("c")),
-                (F.col("c.docid") >= F.col("b.first_docid"))
-                & (F.col("c.docid") <= F.col("b.last_docid")),
-                "left_semi",
-            )
-        )
-        post = unpack_blocks(fetch).join(
-            F.broadcast(cands), "docid", "left_semi"
-        )
-    else:
-        # Weak threshold -> pruning kept most docs; a broadcast would be
-        # unbounded.  Decode the query's blocks once and shuffle-semi-join
-        # on docid equality (hash-partitionable at any scale).
-        post = unpack_blocks(qblocks).join(cands, "docid", "left_semi")
-    if v2:
-        # v2 doclen attach, candidate-scoped: a small candidate set
-        # broadcasts its (docid, doclen) slice; a big one falls back to a
-        # shuffled equality join (same gating as the fetch above)
-        if n_cands <= max_broadcast_candidates:
-            cand_dl = dl.join(F.broadcast(cands), "docid", "left_semi")
-            post = post.join(F.broadcast(cand_dl), "docid")
-        else:
-            post = post.join(dl, "docid")
-
-    sumpart = None
-    for t in live:
-        cond = F.col("term") == t
-        expr = tws[t].sumpart_expr(F.col("wdf"), F.col("doclen"))
-        sumpart = (
-            F.when(cond, expr) if sumpart is None
-            else sumpart.when(cond, expr)
-        )
-    sumpart = sumpart.otherwise(0.0)
-    agg = post.groupBy("docid").agg(
-        F.sum(sumpart).alias("_s"), F.max("doclen").alias("_dl")
-    )
-    extra = weight.sumextra_expr(F.col("_dl"), qlen, stats)
-    out = agg.select("docid", (F.col("_s") + extra).alias("score"))
-    # Cut to the exact top-k (the deterministic ordering every caller
-    # uses) BEFORE materializing: with a weak threshold the candidate set
-    # can be most of the corpus, and checkpointing it whole would pin an
-    # unbounded number of rows per query.  TakeOrderedAndProject bounds
-    # the materialized result to k rows; then free the persisted candidate
-    # partitions EXPLICITLY — a long-lived session issuing many queries
-    # must not rely on ContextCleaner GC to evict them.
-    out = (
-        out.orderBy(F.desc("score"), F.asc("docid"))
-        .limit(k)
-        .localCheckpoint(eager=True)
-    )
-    cands.unpersist()
-    return out
-
-
-def brute_topk(
-    blocked: DataFrame,
-    stats: GlobalStats,
-    tstats: dict[str, TermStats],
-    terms: list[str],
-    k: int,
-    weight: Weight,
-    wqf: dict[str, int] | None = None,
-    doclens: DataFrame | None = None,
-) -> DataFrame:
-    """No-pruning twin of wand_topk (equivalence oracle for safety tests)."""
-    wqf = wqf or {}
-    tws = {
-        t: weight.init_term(stats, tstats[t], wqf=wqf.get(t, 1))
-        for t in terms
-        if tstats.get(t) and tstats[t].tf > 0
-    }
-    if not tws:
-        return blocked.sparkSession.createDataFrame([], "docid long, score double")
-    if getattr(weight, "needs_uniqterms", False):
-        raise ValueError(
-            f"{type(weight).__name__} needs the per-doc uniqterms stat, "
-            "which blocked postings do not carry; use Planner.search"
-        )
-    live = sorted(tws)
-    post = unpack_blocks(blocked.where(F.col("term").isin(live)))
-    if "payload_v" in blocked.columns:
-        if doclens is None:
-            raise ValueError("payload v2 blocked table requires doclens")
-        post = post.join(doclens.select("docid", "doclen"), "docid")
-    sumpart = None
-    for t in live:
-        part_expr = tws[t].sumpart_expr(F.col("wdf"), F.col("doclen"))
-        if sumpart is None:
-            sumpart = F.when(F.col("term") == t, part_expr)
-        else:
-            sumpart = sumpart.when(F.col("term") == t, part_expr)
-    sumpart = sumpart.otherwise(0.0)
-    qlen = sum(wqf.get(t, 1) for t in terms)
-    agg = post.groupBy("docid").agg(
-        F.sum(sumpart).alias("_s"), F.max("doclen").alias("_dl")
-    )
-    extra = weight.sumextra_expr(F.col("_dl"), qlen, stats)
-    return agg.select("docid", (F.col("_s") + extra).alias("score"))
 
 
 def batch_wand_topk(
@@ -306,7 +77,7 @@ def batch_wand_topk(
     scores >= T_q, has all its blocks surviving, and all its non-essential
     postings looked up — so its score is complete, while partially-scored
     or skipped docs rank strictly below every true top-k member and can
-    never displace one (same argument as wand_topk).
+    never displace one.
 
     Requires a weight with no doc-dependent extra part (maxextra == 0,
     e.g. default BM25 k2=0); the caller falls back to the row-postings
@@ -316,7 +87,6 @@ def batch_wand_topk(
 
     from pyspark.sql import Window
 
-    from xapian_spark.index.blocks import unpack_blocks, unpack_blocks_keyed
     from xapian_spark.ranking.weights import BM25Weight, TradWeight
 
     # the inlined sumpart/maxpart shapes below are the BM25-family
@@ -335,7 +105,7 @@ def batch_wand_topk(
         [], "query string, rank int, docid long, score double"
     )
     # payload v2: no doclen stream in blocks — scoring joins the doclens
-    # table back in, candidate-scoped (see wand_topk / blocks.py)
+    # table back in, candidate-scoped (see blocks.py)
     v2 = "payload_v" in blocked.columns
     if v2 and doclens is None:
         raise ValueError("payload v2 blocked table requires doclens")
@@ -417,8 +187,6 @@ def batch_wand_topk(
         if v2:
             star_posts = star_posts.join(dl, "docid")
     wq = Window.partitionBy("term", "tw").orderBy(F.desc("s"))
-    _diag = bool(os.environ.get("WAND_DIAG"))  # phase timing for perf work
-    _t0 = time.perf_counter()
     kth = (
         star_posts.join(F.broadcast(star_tw), "term")
         .select(
@@ -434,11 +202,6 @@ def batch_wand_topk(
     for r in kth:
         for qname in star_pairs[(r["term"], r["tw"])]:
             thresholds[qname] = r["thr"]
-    if _diag:
-        print("\nDIAG pass0_sec", round(time.perf_counter() - _t0, 2),
-              "thr_min", round(min(thresholds.values(), default=0.0), 3),
-              "thr_max", round(max(thresholds.values(), default=0.0), 3))
-    _t0 = time.perf_counter()
 
     # -- split (driver): MaxScore essential / non-essential per query -------
     # Ascending-maxpart prefix whose sum stays < T_q is non-essential: docs
@@ -586,13 +349,9 @@ def batch_wand_topk(
     )
     # Per-query top-k is bounded (|queries| * k rows): materialize it,
     # then explicitly free the persisted (query, block) survivors instead
-    # of leaving them to ContextCleaner GC (see wand_topk).
-    if _diag:
-        print("\nDIAG ess_rows", len(ess_rows), "non_rows", len(non_rows),
-              "est_cands", est_cands)
+    # of leaving them to ContextCleaner GC: a long-lived session serving
+    # many batches must not pin their partitions until the next GC.
     out = out.localCheckpoint(eager=True)
-    if _diag:
-        print("\nDIAG main_job_sec", round(time.perf_counter() - _t0, 2))
     surviving.unpersist()
     if non_rows or v2:
         posts.unpersist()
